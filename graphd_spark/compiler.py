@@ -95,16 +95,16 @@ def number_sort_root_keep(con, store) -> bool:
     versioned-away members included) do NOT short-circuit; extra
     predicates, root or-chains, timestamps, and nesting depth don't
     interfere."""
-    from itertools import islice
 
     def walk(c):
         for sc in c.name_strcons:
-            if sc.op == "=" and len(sc.values) == 1 and sc.values[0]:
-                n = len(list(islice(
-                    store.find_by_name(sc.values[0]), 2
-                )))
-                if n == 1:
-                    return True
+            if (
+                sc.op == "="
+                and len(sc.values) == 1
+                and sc.values[0]
+                and store.count_by_name(sc.values[0], 2) == 1
+            ):
+                return True
         for s in c.subs:
             if s.is_optional or s.count_eq == 0:
                 continue
@@ -519,10 +519,12 @@ _ISA_SMALL_SET_MAX = 937
 
 #: sorted-page simulation cap: the incremental-sorter mirror collects
 #: one (id, key...) tuple per candidate, so an unselective sorted read
-#: over a huge store keeps the declarative top-k plan instead (the
-#: truncation needs 2*(start+pagesize) < candidates AND interleaved
-#: null keys to be observable; the cap is far above every golden/fuzz
-#: store and matches the serving mirror's working-set scale)
+#: over a huge store keeps the declarative top-k plan instead.  Below
+#: the cap the mirror still runs only where its reply can differ from
+#: that plan's (sortsim.simulation_needed): a candidate with a null
+#: sort key, a cursor resume, or a reply that renders or checks the
+#: accepted count.  The cap is far above every golden/fuzz store and
+#: matches the serving mirror's working-set scale
 _SORTSIM_CAP = 200_000
 
 #: store size (rows) above which semi/anti sub joins dedup the build
@@ -970,18 +972,15 @@ class Compiler:
             # linkage sub all drop (reference probes in seed-142
             # analysis); a default-comparator value range keeps the
             # string vrange as producer (seeds 139/147).
-            _fixed_producer = bool(con.guid)
-            _one_name_bin = (
-                not _fixed_producer
-                and number_sort_root_keep(con, self.store)
-            )
+            # number_sort_root_keep probes the store (a Spark job on an
+            # attached log), so it is tested last
             if (
                 first.pattern.kind == "value"
                 and comp0 == "number"
                 and not _value_range
-                and not _fixed_producer
-                and not _one_name_bin
+                and not con.guid
                 and _renders
+                and not number_sort_root_keep(con, self.store)
             ):
                 # number-comparator value sorts iterate the NUMBERS
                 # binset, so values that don't decode as numbers (and
@@ -1067,49 +1066,6 @@ class Compiler:
                     ).asc_nulls_last(),
                     _c("id").asc(),
                 ]
-        # the reference's bounded incremental sorter over id-ordered
-        # production (mirror of the fast path; sortsim.py): tight
-        # sorted pages whose candidates interleave null keys truncate
-        # exactly like graphd-sort.c.  Only engages when an INDEXED
-        # producer drives production in id order; bare scans get a
-        # sort-root-ordered producer whose truncation is lossless, so
-        # the declarative top-k plan below is already exact.  Capped:
-        # the sim collects one (id, keys) tuple per candidate, so an
-        # unselective sort over a huge store falls back to the
-        # declarative plan rather than collecting the world.
-        sim_info = None
-        P_sim = 0
-        if (
-            con.sort
-            and not sort_skipped
-            and not ((_vranges or _nranges) and not _range_checked)
-        ):
-            from graphd_spark.sortsim import production_is_id_ordered
-
-            if production_is_id_ordered(con):
-                _ps0 = (
-                    con.pagesize
-                    if con.pagesize is not None
-                    else DEFAULT_PAGESIZE
-                )
-                _rps0 = (
-                    con.resultpagesize
-                    if con.resultpagesize is not None
-                    else _ps0
-                )
-                P_sim = con.start + _rps0
-                if P_sim > 0 and df.limit(
-                    _SORTSIM_CAP + 1
-                ).count() <= _SORTSIM_CAP:
-                    sim_info = self._sortsim_run(
-                        con, plan, df, P_sim, resume_guid, sort_body
-                    )
-        if sim_info is not None:
-            resume = 0
-        elif resume_guid is not None:
-            resume, df = self._key_resume_offset(
-                df, con, plan, resume_guid, sort_body
-            )
         pagesize = (
             con.pagesize if con.pagesize is not None else DEFAULT_PAGESIZE
         )
@@ -1120,6 +1076,68 @@ class Compiler:
             if con.resultpagesize is not None
             else pagesize
         )
+        pat = con.result if con.result is not None else default_read_pattern()
+        wants_cursor = any(p.kind == "cursor" for p in pat.walk())
+        counted = (
+            any(
+                p.kind in ("count", "estimate", "estimate-count")
+                for p in pat.walk()
+            )
+            or con.count_eq is not None
+            or con.count_max is not None
+            or (con.count_min or 0) > 1
+        )
+        need_total = wants_cursor or counted
+        # the reference's bounded incremental sorter over id-ordered
+        # production (mirror of the fast path; sortsim.py): tight
+        # sorted pages whose candidates interleave null keys truncate
+        # exactly like graphd-sort.c.  Only engages when an INDEXED
+        # producer drives production in id order; bare scans get a
+        # sort-root-ordered producer whose truncation is lossless, so
+        # the declarative top-k plan below is already exact.  One job
+        # counts the candidates and their null-keyed share:
+        # - over _SORTSIM_CAP candidates the declarative plan pages
+        #   (the sim would collect one (id, keys) tuple per candidate);
+        # - with no null key, no cursor and no count in the reply the
+        #   sim's page is the full sort's top P
+        #   (sortsim.simulation_needed), so the declarative plan pages
+        #   it too and sorter_trailing is n > P;
+        # - otherwise the sim runs.
+        sim_info = None
+        top_n = None
+        sorter_trailing = None
+        P_sim = con.start + rps
+        if (
+            con.sort
+            and not sort_skipped
+            and not ((_vranges or _nranges) and not _range_checked)
+            and P_sim > 0
+        ):
+            from graphd_spark.sortsim import (
+                production_is_id_ordered,
+                simulation_needed,
+            )
+
+            if production_is_id_ordered(con):
+                n_cand, n_null = self._sort_candidate_counts(
+                    con, plan, df
+                )
+                if n_cand <= _SORTSIM_CAP and simulation_needed(
+                    n_null, con.cursor is not None, counted
+                ):
+                    sim_info = self._sortsim_run(
+                        con, plan, df, P_sim, resume_guid, sort_body
+                    )
+                    sorter_trailing = sim_info[2]
+                elif n_cand <= _SORTSIM_CAP:
+                    top_n = n_cand
+                    sorter_trailing = n_cand > P_sim
+        if sim_info is not None:
+            resume = 0
+        elif resume_guid is not None:
+            resume, df = self._key_resume_offset(
+                df, con, plan, resume_guid, sort_body
+            )
         start = con.start + resume
         limit = start + rps
         elem = self._elem_struct(con, plan)
@@ -1164,18 +1182,6 @@ class Compiler:
             n_prefix = start + len(page)
         else:
             n_prefix = df.limit(start).count()
-        pat = con.result if con.result is not None else default_read_pattern()
-        wants_cursor = any(p.kind == "cursor" for p in pat.walk())
-        need_total = (
-            wants_cursor
-            or any(
-                p.kind in ("count", "estimate", "estimate-count")
-                for p in pat.walk()
-            )
-            or con.count_eq is not None
-            or con.count_max is not None
-            or (con.count_min or 0) > 1
-        )
         # iterator-state resumes reposition the scan, so `total` below
         # counts the REMAINING tail; o_base converts to the absolute
         # frame for count-bound checks and count rendering (probed:
@@ -1238,6 +1244,8 @@ class Compiler:
                 total = min(sim_info[1], verify_need)
             else:
                 total = n_prefix
+        elif top_n is not None:
+            total = top_n  # exact; the reply renders no count
         elif need_total:
             cdf = df
             # estimates look past the count cap ("the count page size
@@ -1265,7 +1273,7 @@ class Compiler:
         if not ok:
             raise GraphdError("EMPTY", "not found")
         rows = page
-        if wants_cursor and sim_info is not None:
+        if wants_cursor and sorter_trailing is not None:
             # exact cursor-nullness rule of the incremental sorter
             # (mirror of the fast path; graphd_sort_cursor_get after
             # graphd_sort_finish drops the con_start prefix): null
@@ -1276,7 +1284,7 @@ class Compiler:
                 rows
                 and con.start == 0
                 and start + len(rows) == P_sim
-                and sim_info[2]
+                and sorter_trailing
             ):
                 if self.store.count() >= 1000:
                     members = self._and_members(con)
@@ -3121,6 +3129,22 @@ class Compiler:
                 break
         out.append(bid)
         return tuple(out)
+
+    def _sort_candidate_counts(self, con, plan, df):
+        """(candidates, candidates with a null sort-key component) in
+        one job; both stop counting past _SORTSIM_CAP + 1 rows."""
+        null_key = _l(False)
+        for col, _d, _k in self._sort_components(con, plan)[:-1]:
+            null_key = null_key | col.isNull()
+        r = (
+            df.limit(_SORTSIM_CAP + 1)
+            .agg(
+                F.count(_l(1)).alias("n"),
+                F.count(F.when(null_key, _l(1))).alias("nulls"),
+            )
+            .head()
+        )
+        return r["n"], r["nulls"]
 
     def _sortsim_run(self, con, plan, df, P_sim: int, resume_guid,
                      sort_body=None):

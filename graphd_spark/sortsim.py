@@ -40,9 +40,55 @@ after one page.
 
 Keys are compared per component: ``None`` is null; descending flips
 the component.  The trailing id component is never null.
+
+When the machine is needed (``simulation_needed``): its page, cursor
+nullness and count differ from the plain top-k of the full sort only
+through a null sort key, a cursor grid, or the accepted count.  A
+sorted page with none of the three is the full sort's top P, so the
+Spark path pages it with ``orderBy().offset().limit()`` and never
+collects the candidates.
 """
 
 from __future__ import annotations
+
+
+def simulation_needed(null_keyed: int, resuming: bool,
+                      counted: bool) -> bool:
+    """Must a sorted page replay the sorter, or is ``simulate``'s
+    result the exact top of the full sort?
+
+    null_keyed: candidates with a null component in their sort key.
+    resuming: the read carries a cursor (``simulate`` gets a grid).
+    counted: the reply renders or checks the set count (``count``,
+    estimates, an exact or maximum count bound, or a minimum above 1).
+
+    Proof that ``simulate(entries, P, specs)`` with no null key and no
+    grid returns ``sorted(entries)[:P]`` and ``trailing == n > P``:
+
+    1. ``_pre_cmp`` and ``_full_cmp`` differ only where exactly one
+       side of a component is ``None`` (their null polarities are
+       inverted) or where an un-precomparable key decides (then
+       ``_pre_cmp`` reports unknown and ``simulate`` falls through to
+       ``_full_cmp``).  Without nulls a known ``_pre_cmp`` therefore
+       equals ``_full_cmp``, and the unique id tiebreak makes both
+       non-zero for distinct candidates.
+    2. So a candidate is dropped exactly when it sorts after the
+       median, the P-th best of the last condense.  Those P array
+       entries were all seen already, so the dropped candidate is not
+       among the best P seen so far.  Accepted candidates join the
+       array, and a condense keeps its best P.  By induction the array
+       always holds the best P candidates seen, and the final condense
+       returns the exact top P.
+    3. A truncation (``trailing``) happens iff the array ever holds
+       more than P entries, i.e. iff ``n > P``.
+
+    The accepted count is not ``n`` (dropped candidates are never
+    counted), so a counted reply still runs the machine, as does any
+    null key or cursor resume.  Since the page and ``trailing`` are
+    exact, a requested cursor is non-null iff ``start == 0`` and
+    ``n > P`` (``graphd_sort_cursor_get``'s rule with those values).
+    """
+    return null_keyed > 0 or resuming or counted
 
 
 def production_is_id_ordered(con) -> bool:

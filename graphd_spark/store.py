@@ -325,6 +325,11 @@ class PrimitiveStore:
         for id in self._name_ids.get(name.lower(), ()):
             yield self.rows[id - self._base]
 
+    def count_by_name(self, name: str, cap: int) -> int:
+        """``min(cap, len(list(find_by_name(name))))`` without
+        listing the bin."""
+        return min(cap, len(self._name_ids.get(name.lower(), ())))
+
     def lineage_members(self, lineage: str) -> list[str]:
         """All version GUIDs of a lineage (walks the next chain)."""
         out = []
@@ -961,6 +966,26 @@ class ParquetLogStore(PrimitiveStore):
             yield from super().find_by_name(name)
             return
         yield from self._find_spark("name", name)
+
+    def count_by_name(self, name: str, cap: int) -> int:
+        if self._covers_all:
+            return super().count_by_name(name, cap)
+        from pyspark.sql import functions as F
+
+        n = (
+            self._log_df()
+            .filter(F.lower(F.col("name")) == name.lower())
+            .filter(F.col("id") < self._flushed)
+            .limit(cap)
+            .count()
+        )
+        # unflushed tail (open transaction), as in _find_spark
+        for p in self.rows[self._flushed - self._base:]:
+            if n >= cap:
+                break
+            if p.name is not None and p.name.lower() == name.lower():
+                n += 1
+        return n
 
     #: max rows a point lookup may COLLECT at once; a hotter key
     #: switches to toLocalIterator streaming (one partition's batch at

@@ -244,6 +244,17 @@ def test_jexpr_cache_is_bounded(spark):
     assert jx._l("bound-pin-warm") is jx._l("bound-pin-warm")
 
 
+def test_jexpr_put_evicts_several_oldest_at_once(monkeypatch):
+    # a cache more than one entry over its cap (the cap was lowered
+    # under a full cache) must shed all of the surplus, oldest first
+    import graphd_spark.jexpr as jx
+
+    monkeypatch.setattr(jx, "_JCACHE", {f"k{i}": i for i in range(10)})
+    monkeypatch.setattr(jx, "_JCACHE_CAP", 4)
+    assert jx._put("new", "v") == "v"
+    assert list(jx._JCACHE) == ["k7", "k8", "k9", "new"]
+
+
 def test_jexpr_float_literals_key_by_repr(spark):
     # 0.0 / -0.0 compare equal but are different literals; NaN never
     # compares equal to itself but must key stably (no dead entries)

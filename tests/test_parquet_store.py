@@ -208,3 +208,156 @@ def test_compact_refuses_foreign_layout(spark):
     assert sorted(
         f for f in os.listdir(log) if f.endswith(".parquet")
     ) == names_before
+
+
+# -- sorted pages: hydrated mirror vs attach without hydrate -------------
+#
+# A hydrated mirror answers sorted reads on the fast path, which always
+# replays graphd's bounded sorter (sortsim.simulate); an attached log
+# answers them on the Spark path, which replays it only where its reply
+# can differ from the declarative top-k (sortsim.simulation_needed).
+
+
+def _nation_log(n: int, null_every: int = 0, name: str = "nation",
+                values=None) -> str:
+    """A log of ``n`` ``name`` nodes with seeded distinct values (or
+    ``values(i)``); every ``null_every``-th node has no value."""
+    import random
+
+    from graphd_spark.store import ParquetLogStore
+
+    rng = random.Random(n)
+    tokens = rng.sample(range(16**6), n)
+    log = tempfile.mkdtemp(prefix="graphd_log_")
+    st = ParquetLogStore(None, log, fresh=True)
+    st.begin()
+    for i in range(n):
+        if null_every and i % null_every == 3:
+            value = None
+        elif values is not None:
+            value = values(i)
+        else:
+            value = f"n{tokens[i]:06x}"
+        st.append(name=name, value=value)
+    st.commit()
+    return log
+
+
+def _attached_and_hydrated(spark, log):
+    attached = GraphSession.attach(spark, log)
+    hydrated = GraphSession.attach(spark, log)
+    assert hydrated.store.hydrate()
+    return attached, hydrated
+
+
+def _action_groups(spark, monkeypatch, fn):
+    """Run ``fn()`` with each DataFrame action in its own Spark job
+    group; return the number of groups that launched a job (jobs
+    launched outside any action count as one more group)."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    sc = spark.sparkContext
+    groups = ["sorted-page-outer"]
+
+    def grouped(method):
+        def run(self, *a, **k):
+            groups.append(f"sorted-page-action-{len(groups)}")
+            sc.setJobGroup(groups[-1], "test", False)
+            try:
+                return method(self, *a, **k)
+            finally:
+                sc.setJobGroup(groups[0], "test", False)
+        return run
+
+    for name in ("collect", "count", "toLocalIterator"):
+        monkeypatch.setattr(
+            DataFrame, name, grouped(getattr(DataFrame, name))
+        )
+    sc.setJobGroup(groups[0], "test", False)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup("sorted-page-idle", "test", False)
+        monkeypatch.undo()
+    st = sc.statusTracker()
+    return sum(1 for g in groups if st.getJobIdsForGroup(g))
+
+
+SORTED_PAGES = [
+    'read (name="nation" sort=(value) pagesize=10 result=((value)))',
+    'read (name="nation" sort=(-value) pagesize=6 result=((value)))',
+    'read (name="nation" sort=(value) start=4 pagesize=5 '
+    'result=((value)))',
+    'read (name="nation" sort=(value) start=4 pagesize=5 '
+    'result=(cursor (value)))',
+    'read (name="nation" sort=(value) pagesize=500 '
+    'result=(cursor (value)))',
+    'read (name="nation" sort=(value) start=300 pagesize=5 '
+    'result=((value)))',
+    'read (name="nation" sort=(value) pagesize=8 result=(count (value)))',
+    'read (name="nation" sort=(-value guid) pagesize=4 count>=2 '
+    'result=(count (value guid)))',
+]
+
+
+@pytest.mark.parametrize("null_every", [0, 7])
+def test_sorted_pages_attached_match_hydrated(spark, null_every):
+    log = _nation_log(90, null_every)
+    attached, hydrated = _attached_and_hydrated(spark, log)
+    for q in SORTED_PAGES:
+        assert attached.request(q) == hydrated.request(q), q
+    # a cursor chain: every page, resumed pages included
+    q = (
+        'read (name="nation" sort=(value) pagesize=7 %s'
+        'result=(cursor (value)))'
+    )
+    cur = None
+    for page in range(1, 5):
+        q_page = q % (f'cursor="{cur}" ' if cur else "")
+        reply = attached.request(q_page)
+        assert reply == hydrated.request(q_page)
+        if not reply.startswith('ok ("sort:'):
+            break
+        cur = reply.split('"')[1]
+    assert page >= 2
+
+
+def test_null_free_sorted_page_runs_two_spark_actions(spark, monkeypatch):
+    """Without null keys, cursor or count, the attached page is one
+    counting job and one top-k job; no candidate list is collected."""
+    log = _nation_log(90)
+    attached, hydrated = _attached_and_hydrated(spark, log)
+    q = SORTED_PAGES[0]
+    want = hydrated.request(q)
+    got = []
+    n = _action_groups(spark, monkeypatch,
+                       lambda: got.append(attached.request(q)))
+    assert got == [want]
+    assert n <= 2
+
+
+def test_number_sort_over_a_large_name_bin(spark, monkeypatch):
+    """A name bin over POINT_LOOKUP_BOUND: the number-sort probe stops
+    at 2 rows, and the attached reply matches the hydrated mirror."""
+    from graphd_spark.store import ParquetLogStore
+
+    n = ParquetLogStore.POINT_LOOKUP_BOUND + 40
+    log = _nation_log(
+        n, name="item",
+        values=lambda i: f"x{i}" if i % 5 == 0 else str((i * 37) % 1000),
+    )
+    attached, hydrated = _attached_and_hydrated(spark, log)
+    counted = []
+    groups = _action_groups(
+        spark, monkeypatch,
+        lambda: counted.append(attached.store.count_by_name("ITEM", 2)),
+    )
+    assert counted == [2] and groups == 1
+    assert hydrated.store.count_by_name("item", 2) == 2
+    for q in (
+        'read (name="item" sort=(value) sort-comparator="number" '
+        'pagesize=6 result=((value)))',
+        'read (name="item" sort=(-value) sort-comparator="number" '
+        'pagesize=6 result=((value)))',
+    ):
+        assert attached.request(q) == hydrated.request(q), q
