@@ -253,14 +253,14 @@ def main() -> None:
         # more than 2x the same run's best sample means an ambient
         # window inflated most samples of THIS query (observed
         # repeatedly on identical code; the min is the quiet floor).
-        # One full re-sample replaces the tainted set iff its median
-        # is better; `queries_retried` records every use.  Quiet runs
-        # (the common case) are byte-identical to the old protocol.
+        # One full re-sample replaces the tainted set whatever its
+        # median (keeping only a lower one could only lower the
+        # reported numbers); `queries_retried` records every use.
+        # Quiet runs (the common case) are byte-identical to the old
+        # protocol.
         if statistics.median(samples) > 2 * min(samples):
             retried.append(name)
-            resamples = [_sample(fn)[1] for _ in range(runs)]
-            if statistics.median(resamples) < statistics.median(samples):
-                samples = resamples
+            samples = [_sample(fn)[1] for _ in range(runs)]
         timings[name] = round(statistics.median(samples), 3)
         # best-of sample alongside the median (ADDITIVE field; the
         # reported per-query number and the headline total stay the

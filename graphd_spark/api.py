@@ -362,14 +362,6 @@ class GraphSession:
         except StoreError as e:
             return self._error(e.code, e.message, rid, extra=_resolved())
 
-    def request_script(self, text: str) -> list[str]:
-        """Run a batch of newline-separated requests (rungraphd -y)."""
-        return [
-            self.request(line)
-            for line in text.splitlines()
-            if line.strip()
-        ]
-
     def _id_of_line(self, line: str) -> Optional[str]:
         # best-effort id= echo for lines that failed to parse
         import re

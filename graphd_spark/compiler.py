@@ -26,7 +26,8 @@ physical strategy:
 Driver-side state (the store) is used only to bind literals the
 reference also binds pre-plan: type names to typeguids
 (graphd-read.c:36-135), guid~= lineages, next= pointers, asof
-horizons.
+horizons.  Intrinsic literals are resolved by graphd_spark.intrinsic,
+which the serving fast path shares.
 """
 
 from __future__ import annotations
@@ -39,13 +40,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from graphd_spark.comparators import (
-    decode_number,
     fuzzy_key,
     literal_key,
     number_bin_lookup,
     resolve_comparator,
     sort_key_column,
-    value_norm_key,
 )
 from graphd_spark.gql.ir import (
     Constraint,
@@ -54,6 +53,19 @@ from graphd_spark.gql.ir import (
     LINKAGES,
     Pattern,
     TRUE,
+)
+from graphd_spark.intrinsic import (
+    EXACT,
+    LOWER,
+    _strcon_is_bin,
+    dateline_bound,
+    eq_keys,
+    guid_sets,
+    merge_strcons,
+    next_prevs,
+    timestamp_envelope,
+    timestamp_id_bounds,
+    type_lineages,
 )
 from graphd_spark.model import guid_serial, ts_from_string
 from graphd_spark.pattern import (
@@ -159,31 +171,6 @@ def _iter_expressible(con) -> bool:
         if not _iter_expressible(s):
             return False
     return True
-
-
-def _strcon_is_bin(sc) -> bool:
-    """Does this string constraint contribute an ITERATOR (hmap /
-    prefix-bin / vrange) to the reference's and-tree — pre-evaluating
-    into frozen sub-cursor fixed sets — or only a constraint-level
-    check (graphd_match)?  Probed round 8: ``value!=`` and
-    prefix-less globs leave the BARE gmap freeze (checks don't
-    pre-evaluate); equalities, ranges, word-prefix globs, and
-    wildcard-free ``~=`` patterns pre-evaluate."""
-    if sc.op in ("=", "<", "<=", ">", ">="):
-        return True
-    if sc.op != "~=":
-        return False  # '!=': check-only (probed: bare gmap freeze)
-    if len(sc.values) != 1 or not sc.values[0]:
-        return False
-    pat = sc.values[0]
-    body = pat[1:] if pat.startswith("^") else pat
-    if "*" not in body and "?" not in body:
-        return True  # exact word pattern: hmap bins
-    if body.endswith("*") and "?" not in body:
-        p0 = body[:-1]
-        if p0 and "*" not in p0 and p0.isalnum() and p0.isascii():
-            return True  # word-prefix bins
-    return False
 
 
 def _sub_iter_shape_ok(sub) -> bool:
@@ -381,92 +368,6 @@ class SubPlan:
     #: renders null otherwise (probed: non-winning branch slots are
     #: null, a winning zero-row sub is "()")
     eff_col: Optional[str] = None
-
-
-TS_MIN = 0
-TS_MAX = 0xFFFFFFFFFFFF  # GRAPH_TIMESTAMP_MAX (libgraph/graph.h:399)
-
-
-def timestamp_envelope(con) -> tuple:
-    """EXACT clause_merge_timestamp fold
-    (graphd-constraint-clause.c:100-160): every op compiles against
-    the literal's single expanded instant (a partial stamp expands to
-    its LOWER instant, gdp_token_totime — probed round 7: ts>1970
-    matches .0001 stamps, ts=1970/<=1970 match only the instant,
-    ts!=1970 matches everything away from the envelope edges) into one
-    inclusive [min, max] envelope, folded in PARSE order:
-
-    - '<'  sets max = ts-1 UNCONDITIONALLY (can loosen a prior max —
-      reference quirk), false when ts == MIN;
-    - '<=' lowers max to ts;
-    - '='  narrows both edges to ts;
-    - '!=' nudges only an exactly-equal EDGE inward (order-dependent:
-      a '!=' before the bound that would create the edge is a no-op);
-    - '>=' raises min to ts;
-    - '>'  raises min to ts+1 when min <= ts, false when ts >= MAX.
-
-    Returns (tmin, tmax, false) with tmin/tmax None when unbounded
-    (still at the type extremes).  Raises ValueError on unparseable
-    literals (callers report SYNTAX)."""
-    if not con.timestamps:
-        return None, None, False
-    tmin, tmax = TS_MIN, TS_MAX
-    false = False
-    for tc in con.timestamps:
-        try:
-            ts = ts_from_string(tc.text)
-        except ValueError:
-            raise ValueError(tc.text)
-        if tc.op == "<":
-            if ts == TS_MIN:
-                false = True
-            else:
-                tmax = ts - 1
-        elif tc.op == "<=":
-            if tmax > ts:
-                tmax = ts
-        elif tc.op == "=":
-            if tmin < ts:
-                tmin = ts
-            if tmax > ts:
-                tmax = ts
-        elif tc.op == "!=":
-            if tmin == ts:
-                tmin += 1
-            if tmax == ts:
-                tmax -= 1
-        elif tc.op == ">=":
-            if tmin < ts:
-                tmin = ts
-        elif tc.op == ">":
-            if ts >= TS_MAX:
-                false = True
-            elif tmin <= ts:
-                tmin = ts + 1
-        else:
-            raise GraphdError(
-                "SYNTAX",
-                f"cannot use {tc.op} with timestamps",
-            )
-    if tmax < tmin:
-        false = True
-    return (
-        tmin if tmin > TS_MIN else None,
-        tmax if tmax < TS_MAX else None,
-        false,
-    )
-
-
-def timestamp_bounds(con) -> tuple:
-    """(min, max) view of timestamp_envelope for the id-bsearch
-    compile; a false envelope returns an impossible pair."""
-    try:
-        tmin, tmax, false = timestamp_envelope(con)
-    except ValueError:
-        return None, None  # the row-predicate builder reports it
-    if false:
-        return 1, 0
-    return tmin, tmax
 
 
 @dataclass
@@ -4132,7 +4033,11 @@ class Compiler:
         # a parentless '->' matches nodes too (test/unit/nullguid2.sh).
 
         if con.dateline is not None:
-            conds.append(self._dateline_cond(con.dateline))
+            # id-horizon predicate (partition-prunable at scale)
+            b = dateline_bound(con.dateline)
+            conds.append(
+                _l(False) if b is None else _OPS[b[0]](_c("id"), b[1])
+            )
 
         if con.guid:
             conds.append(self._guid_col_pred(_c("guid"), con.guid))
@@ -4151,14 +4056,14 @@ class Compiler:
 
         # value-comparator overrides matching only (david_8.sh)
         match_comp = con.value_comparator or con.comparator
-        for sc in self._merged_strcons(con.type_strcons, match_comp):
+        for sc in merge_strcons(con.type_strcons, match_comp):
             conds.append(self._type_cond(sc))
-        for sc in self._merged_strcons(con.name_strcons, match_comp):
+        for sc in merge_strcons(con.name_strcons, match_comp):
             conds.append(
                 self._string_cond(_c("name"), sc, match_comp,
                                   is_value=False)
             )
-        for sc in self._merged_strcons(con.value_strcons, match_comp):
+        for sc in merge_strcons(con.value_strcons, match_comp):
             conds.append(
                 self._string_cond(_c("value"), sc, match_comp,
                                   is_value=True)
@@ -4187,30 +4092,18 @@ class Compiler:
                 if tmax_e is not None:
                     conds.append(c <= tmax_e)
         if con.timestamps and not in_branch:
-            # timestamp bounds ALSO compile to id-range datelines via
-            # a bsearch that assumes timestamp order
-            # (graphd_read_compile_timestamps, graphd-read.c:300-420;
-            # graphd-timestamp.c:46).  Explicit timestamp= writes
-            # break monotonicity, so the id bound can exclude rows the
-            # row predicate matches — probed: ts>0 skips an
-            # out-of-order stamp below the boundary id.  Or-BRANCH
-            # timestamps are CHECK-only (no iterator compiles for a
-            # branch), so no id bound applies there (or-chain fuzz
-            # seed 1151: an out-of-order stamp survives a branch's
-            # ts>1970)
-            tmin, tmax = timestamp_bounds(con)
-            if tmin is not None and tmin > 0:
-                b = self.store.timestamp_to_id(tmin, "ge")
-                if b is None:
-                    conds.append(_l(False))
-                else:
-                    conds.append(_c("id") >= b)
-            if tmax is not None:
-                b = self.store.timestamp_to_id(tmax, "le")
-                if b is None:
-                    conds.append(_l(False))
-                else:
-                    conds.append(_c("id") < b + 1)
+            # timestamp bounds ALSO compile to id bounds
+            # (timestamp_id_bounds; probed: ts>0 skips an out-of-order
+            # stamp below the boundary id).  Or-BRANCH timestamps are
+            # CHECK-only (or-chain fuzz seed 1151: an out-of-order
+            # stamp survives a branch's ts>1970)
+            lo, hi, dead = timestamp_id_bounds(self.store, con)
+            if dead:
+                conds.append(_l(False))
+            if lo is not None:
+                conds.append(_c("id") >= lo)
+            if hi is not None:
+                conds.append(_c("id") <= hi)
 
         # generation: default newest=0 — only current versions match
         # (ref graphd/graphd.h:458-472).  A next= constraint naming a
@@ -4239,190 +4132,32 @@ class Compiler:
             pred = pred & c
         return pred
 
-    def _dateline_cond(self, dl):
-        """dateline OP "db.count": id-horizon predicate (ref
-        graphd/graphd-dateline.c; partition-prunable at scale)."""
-        op, text = dl
-        t = text.strip().lower()
-        db, _, count = t.rpartition(".")
-        try:
-            n = int(count, 16)  # dateline counts are hexadecimal
-        except ValueError:
-            return _l(False)  # unparseable dateline matches nothing
-        c = _c("id")
-        return {
-            "=": c == n, "!=": c != n,
-            "<": c < n, "<=": c < n,
-            ">": c >= n, ">=": c >= n,
-        }[op]
-
-    def _merged_strcons(self, scs, comparator):
-        """String constraints merge like guid sets when an '=' include
-        set exists (ref graphd-string-constraint.c set play-off, test
-        guidlist2): '=' sets intersect, '!=' subtracts from the
-        include, and a null-only '~=' reduces the include to its null
-        member.  Other operators keep AND semantics."""
-        from graphd_spark.comparators import value_eq
-        from graphd_spark.gql.ir import StrCon
-
-        eqs = [sc for sc in scs if sc.op == "="]
-        if not eqs:
-            return scs
-
-        def eq(a, b):
-            if a is None or b is None:
-                return a is None and b is None
-            return value_eq(comparator, a, b)
-
-        include = list(eqs[0].values)
-        for sc in eqs[1:]:
-            include = [
-                v for v in include if any(eq(v, w) for w in sc.values)
-            ]
-        rest = []
-        for sc in scs:
-            if sc.op == "=":
-                continue
-            if sc.op == "!=":
-                include = [
-                    v for v in include
-                    if not any(eq(v, w) for w in sc.values)
-                ]
-            elif sc.op == "~=" and not any(
-                v is not None for v in sc.values
-            ):
-                # ~=() / ~=null against an include: null members only
-                include = [v for v in include if v is None]
-            else:
-                rest.append(sc)
-        return [StrCon("=", include)] + rest
-
-    def _expand_lineage(self, guids):
-        """All version GUIDs of the listed guids' lineages (~= match)."""
-        out: list[str] = []
-        for g in guids:
-            p = self.store.get(g)
-            if p is not None:
-                out.extend(self.store.lineage_members(p.lineage))
-        return out
-
     def _guid_col_pred(self, col, gcs):
-        """All guid constraints on one column, merged with the
-        reference's set algebra (ref graphd-guid-constraint.c:150-330):
-        '=' sets intersect, '~=' expands lineages (null expands to
-        null; an empty/null-only match equals =null) and intersects an
-        existing include set, and '!=' subtracts from the include set
-        when one exists — so =(G null) != (G) keeps the null member
-        (test/unit/guidlist3.sh).  Standalone '~='/'!=' keep their
-        direct predicate forms."""
-        include: Optional[set] = None
-        standalone = []
-        excludes = []
-        for gc in gcs:
-            if gc.op == "=":
-                s = set(gc.guids)
-                include = s if include is None else (include & s)
-            elif gc.op == "~=":
-                nonnull = [g for g in gc.guids if g is not None]
-                has_null = any(g is None for g in gc.guids)
-                if not nonnull:
-                    # ~=() / ~=null reduces to =null
-                    s = {None}
-                else:
-                    s = set(self._expand_lineage(nonnull))
-                    if has_null:
-                        s.add(None)
-                if include is None and nonnull:
-                    standalone.append(s)
-                else:
-                    include = s if include is None else (include & s)
-            else:
-                excludes.append(gc)
-        if include is not None:
-            for gc in excludes:
-                include -= set(gc.guids)
-            excludes = []
+        """All guid constraints on one column (guid_sets) as one
+        predicate."""
+        include, standalone, excludes = guid_sets(self.store, gcs)
         parts = []
-        if include is not None:
-            nonnull = [g for g in include if g is not None]
-            p = None
-            if nonnull:
-                p = col.isin(nonnull)
-            if None in include:
-                p = col.isNull() if p is None else (p | col.isNull())
-            parts.append(p if p is not None else _l(False))
-        for s in standalone:
+        for s in standalone if include is None else [include, *standalone]:
             nonnull = [g for g in s if g is not None]
-            p = col.isin(nonnull) if nonnull else _l(False)
+            p = col.isin(nonnull) if nonnull else None
             if None in s:
-                p = p | col.isNull()
-            parts.append(p)
-        for gc in excludes:
+                p = col.isNull() if p is None else (p | col.isNull())
+            parts.append(_l(False) if p is None else p)
+        if excludes is not None:
             # standalone '!=': the linkage must exist and differ
-            nonnull = [g for g in gc.guids if g is not None]
             p = col.isNotNull()
-            if nonnull:
-                p = p & ~col.isin(nonnull)
-            parts.append(p)
+            parts.append(p & ~col.isin(excludes) if excludes else p)
         pred = parts[0]
         for p in parts[1:]:
             pred = pred & p
         return pred
 
-    def _guid_cond(self, col, gc, nullable: bool):
-        if gc.op == "~=":
-            # lineage match (ref graphd-guid-constraint.c): any version
-            # in the lineage of each listed GUID
-            guids: list[str] = []
-            for g in gc.guids:
-                if g is None:
-                    continue
-                p = self.store.get(g)
-                if p is not None:
-                    guids.extend(self.store.lineage_members(p.lineage))
-            if not guids:
-                return _l(False)
-            return col.isin(guids)
-        nonnull = [g for g in gc.guids if g is not None]
-        has_null = any(g is None for g in gc.guids)
-        if gc.op == "=":
-            parts = []
-            if nonnull:
-                parts.append(col.isin(nonnull))
-            if has_null:
-                parts.append(col.isNull())
-            if not parts:
-                return _l(False)
-            pred = parts[0]
-            for p in parts[1:]:
-                pred = pred | p
-            return pred
-        # '!=': the linkage must exist and differ (null left doesn't
-        # satisfy left!=G, but guid!=null means "exists" trivially)
-        pred = col.isNotNull()
-        if nonnull:
-            pred = pred & ~col.isin(nonnull)
-        return pred
-
     def _next_cond(self, gc):
-        """next=G: this primitive's successor is G <=> G.prev == guid;
-        next~=G widens to the whole lineage of G (any member's prev —
-        ref test/unit/guid2.sh)."""
+        """next=G (next_prevs): the row is a listed guid's
+        predecessor; next=null: the row has no successor."""
         parts = []
-        has_null = any(g is None for g in gc.guids)
-        prevs = []
-        for g in gc.guids:
-            if g is None:
-                continue
-            targets = [g]
-            if gc.op == "~=":
-                p = self.store.get(g)
-                if p is not None:
-                    targets = self.store.lineage_members(p.lineage)
-            for t in targets:
-                tp = self.store.get(t)
-                if tp is not None and tp.prev is not None:
-                    prevs.append(tp.prev)
+        has_null = None in gc.guids
+        prevs = next_prevs(self.store, gc)
         newest = (_c("__maxgen") - _c("generation")) == 0
         if gc.op in ("=", "~="):
             if prevs:
@@ -4441,19 +4176,11 @@ class Compiler:
         return pred
 
     def _type_cond(self, sc):
-        """type="name": bind names to typeguids pre-plan
-        (ref graphd-read.c:36-135); matching is lineage-canonical."""
+        """type="name" over the lineage-canonical typeguid column
+        (type_lineages)."""
         col = _c("typeguid_lin")
-        guids = []
-        has_null = False
-        for nm in sc.values:
-            if nm is None:
-                has_null = True
-                continue
-            g = self.types.resolve(nm)
-            if g is not None:
-                p = self.store.get(g)
-                guids.append(p.lineage if p is not None else g)
+        guids = type_lineages(self.store, self.types, sc)
+        has_null = None in sc.values
         if sc.op == "=":
             parts = []
             if guids:
@@ -4477,39 +4204,13 @@ class Compiler:
         nonnull = [v for v in sc.values if v is not None]
         has_null = any(v is None for v in sc.values)
 
-        # equality column + literal encodings, per comparator:
-        # - default: fuzzy-key equality (word-aware, numbers normalize;
-        #   validated by test/unit/numberequal r1/r8) via the stored
-        #   value_fkey column
-        # - number/datetime: hash-normalized equality (value_norm)
-        # - case/octet: exact bytes
-        if is_value and comp == "default":
-            # candidates come from the value-hash bucket, then check
-            # with the fuzzy comparison (ref comparator_default_
-            # iterator GRAPHD_OP_EQ + vrange_check_value; numberequal
-            # r8: ' 1' fuzzy-equals '1' but hashes as '1', not '1e0',
-            # so it never surfaces) — both must match
-            eq_col = _c("value_fkey")
-            eq_lits = [fuzzy_key(v) for v in nonnull]
-            norm_lits = [value_norm_key(v) for v in nonnull]
-        elif is_value and comp == "number":
-            # strict: only parseable numbers equal a number literal
-            eq_col = _c("value_num")
-            eq_lits = [
-                value_norm_key(v) if decode_number(
-                    v, scientific=True
-                ) is not None else v.lower()
-                for v in nonnull
-            ]
-        elif is_value and comp == "datetime":
-            eq_col = _c("value_norm")
-            eq_lits = [value_norm_key(v) for v in nonnull]
-        elif comp in ("case", "octet"):
-            eq_col = col
-            eq_lits = nonnull
-        else:
-            eq_col = F.lower(col)
-            eq_lits = [v.lower() for v in nonnull]
+        if sc.op in ("=", "!="):
+            ek = eq_keys(comp, is_value, nonnull)
+            eq_col = (
+                col if ek.field == EXACT
+                else F.lower(col) if ek.field == LOWER
+                else _c(ek.field)
+            )
 
         if sc.op == "=":
             parts = []
@@ -4521,16 +4222,16 @@ class Compiler:
                 parts.append(
                     col.isNull() & (_c("datatype") == 2)
                 )
-            if nonnull and is_value and comp == "default":
+            if nonnull and ek.norms is not None:
                 p = None
-                for k, n in zip(eq_lits, norm_lits):
+                for k, n in zip(ek.keys, ek.norms):
                     t = (eq_col == _l(k)) & (
                         _c("value_norm") == _l(n)
                     )
                     p = t if p is None else (p | t)
                 parts.append(p)
             elif nonnull:
-                parts.append(eq_col.isin(eq_lits))
+                parts.append(eq_col.isin(ek.keys))
             if has_null:
                 parts.append(col.isNull())
             if not parts:
@@ -4550,7 +4251,7 @@ class Compiler:
             # verified via differential probes; test_differential)
             pred = None
             if nonnull:
-                pred = col.isNull() | ~eq_col.isin(eq_lits)
+                pred = col.isNull() | ~eq_col.isin(ek.keys)
             if has_null:
                 p2 = col.isNotNull()
                 pred = p2 if pred is None else (pred & p2)

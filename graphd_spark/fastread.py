@@ -10,6 +10,8 @@ template reads with linkage subconstraints over a driver-resident
 working set — directly from the store's point indexes, with NO Spark
 job, mirroring the DataFrame compiler's semantics expression by
 expression (each mirrored site cites the compiler line it mirrors).
+Intrinsic constraints are not mirrored: both paths translate the one
+resolution in graphd_spark.intrinsic.
 
 Safety model: :class:`FastReader` first WALKS the constraint tree and
 raises :class:`Unsupported` for any feature outside its mirror
@@ -84,7 +86,6 @@ from typing import Iterable, Optional
 
 from graphd_spark.comparators import (
     datetime_scan_order,
-    decode_number,
     delimited_match,
     fuzzy_key,
     literal_key,
@@ -104,7 +105,20 @@ from graphd_spark.compiler import (
     _OPS,
 )
 from graphd_spark.glob import glob_match
-from graphd_spark.gql.ir import Constraint, StrCon, TRUE, FALSE
+from graphd_spark.gql.ir import Constraint, TRUE, FALSE
+from graphd_spark.intrinsic import (
+    EXACT,
+    LOWER,
+    _strcon_is_bin,
+    dateline_bound,
+    eq_keys,
+    guid_sets,
+    merge_strcons,
+    next_prevs,
+    timestamp_envelope,
+    timestamp_id_bounds,
+    type_lineages,
+)
 from graphd_spark.model import Primitive, ts_from_string
 from graphd_spark.pattern import (
     GraphdError,
@@ -476,6 +490,17 @@ def _scalar_var_fn(pat):
 
 _RANGE_OPS = ("<", "<=", ">", ">=")
 
+
+def _guid_pred(val: Optional[str], gs) -> bool:
+    """One field value against its guid_sets result."""
+    include, standalone, excludes = gs
+    if include is not None and val not in include:
+        return False
+    if any(val not in s for s in standalone):
+        return False
+    return excludes is None or (val is not None and val not in excludes)
+
+
 #: graphd_value_compare's cross-type rank (graphd-value.c fall-through
 #: ``a->val_type - b->val_type``; enum graphd.h:1666-1678)
 _KIND_RANK = {
@@ -498,19 +523,6 @@ def _mixed_var_key(kind, v, comparator: str) -> bytes:
     if rank == b"8":
         return rank + (b"true" if v in (True, "true") else b"false")
     return rank + str(v).encode()  # guid hex
-
-
-def _walk_patterns(con: Constraint):
-    for node in con.walk():
-        if node.result is not None:
-            yield from node.result.walk()
-        for _var, pat in node.assignments:
-            yield from pat.walk()
-
-
-def _wants_cursor(con: Constraint) -> bool:
-    pat = con.result if con.result is not None else default_read_pattern()
-    return any(p.kind == "cursor" for p in pat.walk())
 
 
 def shape_flags(con: Constraint) -> dict:
@@ -665,11 +677,8 @@ class FastReader:
         #: constraint; graphd_read_compile_timestamps)
         self._ts_id_bounds: dict = {}
         self._ts_envelopes: dict = {}
-        #: per-request cache of merged string-constraint lists, keyed
-        #: by (constraint identity, iter_level): _iter_intrinsic runs
-        #: once per CANDIDATE, but the merge depends only on the
-        #: node's (rebound-per-request) strcons — constant within one
-        #: reader, which lives for exactly one request
+        #: per-request cache of resolved intrinsic literals, keyed by
+        #: (constraint identity, iter_level); see _resolve
         self._msc_cache: dict = {}
         #: session-level (plan, matches) cache for repeated template
         #: shapes — the serving analog of the reference's iterator
@@ -5611,28 +5620,15 @@ class FastReader:
 
     def _guid_include_ids(self, con: Constraint) -> Optional[set]:
         """Resolved id set when guid constraints pin an include set
-        (mirror of _guid_col_pred's include algebra, compiler.py:2430+;
-        None = no pinning include set)."""
-        include = None
-        for gc in con.guid:
-            if gc.op == "=":
-                s = set(gc.guids)
-                include = s if include is None else (include & s)
-            elif gc.op == "~=":
-                nonnull = [g for g in gc.guids if g is not None]
-                has_null = any(g is None for g in gc.guids)
-                if not nonnull:
-                    s = {None}
-                else:
-                    s = set(self._expand_lineage(nonnull))
-                    if has_null:
-                        s.add(None)
-                if include is not None or not nonnull:
-                    include = s if include is None else (include & s)
-        if include is None:
+        (guid_sets; None = no pinning include set).  A candidate
+        superset: _iter_intrinsic re-checks every member."""
+        if not con.guid:
+            return None
+        gs = self._resolve(con, False)[0]
+        if gs.include is None:
             return None
         out = set()
-        for g in include:
+        for g in gs.include:
             if g is None:
                 continue
             p = self.store.get(g)
@@ -5640,7 +5636,7 @@ class FastReader:
                 out.add(p.id)
         return out
 
-    # -- intrinsic matcher (mirror of _intrinsic_pred) ---------------------
+    # -- intrinsic matcher (translates graphd_spark.intrinsic) -------------
 
     def _match_branch(self, p: Primitive, b: Constraint,
                       skip=None) -> bool:
@@ -5664,7 +5660,7 @@ class FastReader:
                          in_branch: bool = False) -> bool:
         if not self._iter_intrinsic(p, con, in_branch=in_branch):
             return False
-        # generation: default newest=0 (compiler.py:2340-2352)
+        # generation: default newest=0 (mirror of _intrinsic_pred)
         dist = self._maxgen(p) - p.generation
         if con.gens:
             for g in con.gens:
@@ -5728,66 +5724,46 @@ class FastReader:
             return False
         if con.archival == FALSE and p.archival:
             return False
-        if con.dateline is not None and not self._dateline_pred(p, con):
+        (gs, links, prev, nexts, dl, m_tscs, m_nscs, m_vscs,
+         vrange_prod) = self._resolve(con, iter_level)
+        if con.dateline is not None and (
+            dl is None or not _OPS[dl[0]](p.id, dl[1])
+        ):
             return False
-        if con.guid and not self._guid_pred(p.guid, con.guid):
+        if gs is not None and not _guid_pred(p.guid, gs):
             return False
-        for lk, gcs in con.links.items():
-            if gcs and not self._guid_pred(getattr(p, lk), gcs):
+        for lk, lgs in links:
+            if not _guid_pred(getattr(p, lk), lgs):
                 return False
-        if not iter_level:
-            # prev/next are lineage-generational: acceptance-level
-            # only — they never pre-evaluate (probed round 8).
-            # Empty-set cons are the consumed prev=null/next=null
-            # rewrite markers (parser._normalize_version_pointers):
-            # they sign "=()" but match nothing-in-particular
-            live_prev = [gc for gc in con.prev if gc.guids]
-            if live_prev and not self._guid_pred(p.prev, live_prev):
-                return False
-            for gc in con.next:
-                if gc.guids and not self._next_pred(p, gc):
+        # prev/next are lineage-generational: acceptance-level only —
+        # they never pre-evaluate (probed round 8), so _resolve leaves
+        # them empty at iter_level
+        if prev is not None and not _guid_pred(p.prev, prev):
+            return False
+        for op, has_null, prevs in nexts:
+            newest = self._maxgen(p) == p.generation
+            if op == "!=":
+                if newest or p.guid in prevs:
                     return False
-        match_comp = con.value_comparator or con.comparator
-        # merged per (node, iter_level) once per request: the merge
-        # walks only the node's strcons, identical for every candidate
-        mk = (id(con), iter_level)
-        merged = self._msc_cache.get(mk)
-        if merged is None:
-            tscs, nscs, vscs = (
-                con.type_strcons, con.name_strcons, con.value_strcons
-            )
-            if iter_level:
-                # check-only string constraints (no hmap/prefix/vrange
-                # bins) never enter the pre-evaluated set
-                from graphd_spark.compiler import _strcon_is_bin
-
-                tscs = [sc for sc in tscs if _strcon_is_bin(sc)]
-                nscs = [sc for sc in nscs if _strcon_is_bin(sc)]
-                vscs = [sc for sc in vscs if _strcon_is_bin(sc)]
-            merged = self._msc_cache[mk] = (
-                self._merged_strcons(tscs, match_comp),
-                self._merged_strcons(nscs, match_comp),
-                self._merged_strcons(vscs, match_comp),
-                # is a value RANGE the producer?  Only when no other
-                # bin predicate (type/name/value equality or prefix)
-                # can produce
-                iter_level and not any(
-                    sc.op not in _RANGE_OPS
-                    for scs in (tscs, nscs, vscs)
-                    for sc in scs
-                ),
-            )
-        m_tscs, m_nscs, m_vscs, vrange_prod = merged
-        for sc in m_tscs:
-            if not self._type_pred(p, sc):
+            elif not (p.guid in prevs or (has_null and newest)):
                 return False
-        for sc in m_nscs:
-            if not self._string_pred(p, p.name, sc, match_comp,
+        for op, has_null, lins in m_tscs:
+            val = p.typeguid_lin
+            if op == "=":
+                if not (val in lins or (has_null and val is None)):
+                    return False
+            elif (val is not None and val in lins) or (
+                has_null and val is None
+            ):
+                return False
+        match_comp = con.value_comparator or con.comparator
+        for sc, ek in m_nscs:
+            if not self._string_pred(p, p.name, sc, ek, match_comp,
                                      is_value=False,
                                      iter_level=iter_level):
                 return False
-        for sc in m_vscs:
-            if not self._string_pred(p, p.value, sc, match_comp,
+        for sc, ek in m_vscs:
+            if not self._string_pred(p, p.value, sc, ek, match_comp,
                                      is_value=True,
                                      iter_level=iter_level,
                                      range_is_producer=vrange_prod):
@@ -5795,11 +5771,9 @@ class FastReader:
         if con.valuetype is not None and p.datatype != con.valuetype:
             return False
         if con.timestamps:
-            # one inclusive [min, max] envelope per constraint,
-            # mirror of Compiler (timestamp_envelope — ops fold in
-            # parse order with the reference's quirks)
-            from graphd_spark.compiler import timestamp_envelope
-
+            # one inclusive [min, max] envelope per constraint
+            # (timestamp_envelope — ops fold in parse order with the
+            # reference's quirks)
             env = self._ts_envelopes.get(id(con))
             if env is None:
                 try:
@@ -5819,25 +5793,13 @@ class FastReader:
             if tmax_e is not None and t > tmax_e:
                 return False
         if con.timestamps and not in_branch:
-            # timestamp bounds also compile to id-range datelines via
-            # the reference's timestamp->id bsearch (mirror of
-            # _intrinsic_pred; graphd-read.c:300-420); or-BRANCH
-            # timestamps are CHECK-only — no id bound (seed 1151)
+            # id bounds (timestamp_id_bounds); or-BRANCH timestamps
+            # are CHECK-only — no id bound (seed 1151)
             b = self._ts_id_bounds.get(id(con))
             if b is None:
-                from graphd_spark.compiler import timestamp_bounds
-
-                tmin, tmax = timestamp_bounds(con)
-                lo_id = hi_id = None
-                dead = False
-                if tmin is not None and tmin > 0:
-                    lo_id = self.store.timestamp_to_id(tmin, "ge")
-                    dead = dead or lo_id is None
-                if tmax is not None:
-                    hi_id = self.store.timestamp_to_id(tmax, "le")
-                    dead = dead or hi_id is None
-                b = (lo_id, hi_id, dead)
-                self._ts_id_bounds[id(con)] = b
+                b = self._ts_id_bounds[id(con)] = timestamp_id_bounds(
+                    self.store, con
+                )
             lo_id, hi_id, dead = b
             if dead:
                 return False
@@ -5913,218 +5875,111 @@ class FastReader:
             newest = np
         return newest.generation
 
-    def _dateline_pred(self, p: Primitive, con: Constraint) -> bool:
-        """Mirror of _dateline_cond: id-horizon predicate with the
-        reference's <=-is-< / >-is->= collapses; unparseable counts
-        match nothing."""
-        op, text = con.dateline
-        t = text.strip().lower()
-        _db, _, count = t.rpartition(".")
-        try:
-            n = int(count, 16)
-        except ValueError:
-            return False
-        c = p.id
-        return {
-            "=": c == n, "!=": c != n,
-            "<": c < n, "<=": c < n,
-            ">": c >= n, ">=": c >= n,
-        }[op]
+    def _resolve(self, con: Constraint, iter_level: bool) -> tuple:
+        """The node's intrinsic literals, resolved by
+        graphd_spark.intrinsic once per (node, iter_level) per
+        request: _iter_intrinsic runs once per CANDIDATE, but these
+        depend only on the node's (rebound-per-request) constraints
+        and the store — constant within one reader, which lives for
+        exactly one request."""
+        mk = (id(con), iter_level)
+        r = self._msc_cache.get(mk)
+        if r is not None:
+            return r
+        st = self.store
+        tscs, nscs, vscs = (
+            con.type_strcons, con.name_strcons, con.value_strcons
+        )
+        if iter_level:
+            # check-only string constraints (no hmap/prefix/vrange
+            # bins) never enter the pre-evaluated set
+            tscs = [sc for sc in tscs if _strcon_is_bin(sc)]
+            nscs = [sc for sc in nscs if _strcon_is_bin(sc)]
+            vscs = [sc for sc in vscs if _strcon_is_bin(sc)]
+        match_comp = con.value_comparator or con.comparator
+        comp = resolve_comparator(match_comp)
 
-    def _expand_lineage(self, guids):
-        out = []
-        for g in guids:
-            p = self.store.get(g)
-            if p is not None:
-                out.extend(self.store.lineage_members(p.lineage))
-        return out
-
-    def _guid_pred(self, val: Optional[str], gcs) -> bool:
-        """Mirror of _guid_col_pred's set algebra (compiler.py:2430+)."""
-        include = None
-        standalone = []
-        excludes = []
-        for gc in gcs:
-            if gc.op == "=":
-                s = set(gc.guids)
-                include = s if include is None else (include & s)
-            elif gc.op == "~=":
-                nonnull = [g for g in gc.guids if g is not None]
-                has_null = any(g is None for g in gc.guids)
-                if not nonnull:
-                    s = {None}
-                else:
-                    s = set(self._expand_lineage(nonnull))
-                    if has_null:
-                        s.add(None)
-                if include is None and nonnull:
-                    standalone.append(s)
-                else:
-                    include = s if include is None else (include & s)
-            else:
-                excludes.append(gc)
-        if include is not None:
-            for gc in excludes:
-                include -= set(gc.guids)
-            excludes = []
-        if include is not None:
-            if val not in include:
-                return False
-        for s in standalone:
-            if val not in s:
-                return False
-        for gc in excludes:
-            # standalone '!=': the linkage must exist and differ
-            if val is None:
-                return False
-            if val in {g for g in gc.guids if g is not None}:
-                return False
-        return True
-
-    def _next_pred(self, p: Primitive, gc) -> bool:
-        """Mirror of _next_cond (compiler.py:2380+)."""
-        has_null = any(g is None for g in gc.guids)
-        prevs = []
-        for g in gc.guids:
-            if g is None:
-                continue
-            targets = [g]
-            if gc.op == "~=":
-                t = self.store.get(g)
-                if t is not None:
-                    targets = self.store.lineage_members(t.lineage)
-            for t in targets:
-                tp = self.store.get(t)
-                if tp is not None and tp.prev is not None:
-                    prevs.append(tp.prev)
-        newest = (self._maxgen(p) - p.generation) == 0
-        if gc.op in ("=", "~="):
-            if prevs and p.guid in prevs:
-                return True
-            if has_null and newest:
-                return True
-            return False
-        if newest:
-            return False
-        return p.guid not in prevs
-
-    def _merged_strcons(self, scs, comparator):
-        """Shared with the compiler: _merged_strcons is pure logic —
-        re-mirrored here to avoid importing a bound method (the logic
-        is identical; compiler.py:2392-2430)."""
-        from graphd_spark.comparators import value_eq
-
-        eqs = [sc for sc in scs if sc.op == "="]
-        if not eqs:
-            return scs
-
-        def eq(a, b):
-            if a is None or b is None:
-                return a is None and b is None
-            return value_eq(comparator, a, b)
-
-        include = list(eqs[0].values)
-        for sc in eqs[1:]:
-            include = [
-                v for v in include if any(eq(v, w) for w in sc.values)
+        def keyed(scs, is_value):
+            return [
+                (sc, eq_keys(
+                    comp, is_value, [v for v in sc.values if v is not None]
+                ) if sc.op in ("=", "!=") else None)
+                for sc in merge_strcons(scs, match_comp)
             ]
-        rest = []
-        for sc in scs:
-            if sc.op == "=":
-                continue
-            if sc.op == "!=":
-                include = [
-                    v for v in include
-                    if not any(eq(v, w) for w in sc.values)
-                ]
-            elif sc.op == "~=" and not any(
-                v is not None for v in sc.values
-            ):
-                include = [v for v in include if v is None]
-            else:
-                rest.append(sc)
-        return [StrCon("=", include)] + rest
 
-    def _type_pred(self, p: Primitive, sc) -> bool:
-        """Mirror of _type_cond (lineage-canonical type matching)."""
-        val = p.typeguid_lin
-        guids = []
-        has_null = False
-        for nm in sc.values:
-            if nm is None:
-                has_null = True
-                continue
-            g = self.types.resolve(nm)
-            if g is not None:
-                tp = self.store.get(g)
-                guids.append(tp.lineage if tp is not None else g)
-        if sc.op == "=":
-            if guids and val in guids:
-                return True
-            if has_null and val is None:
-                return True
-            return False
-        ok = True
-        if guids:
-            ok = val is None or val not in guids
-        if has_null:
-            ok = ok and val is not None
-        return ok
+        # empty-set cons are the consumed prev=null/next=null rewrite
+        # markers (parser._normalize_version_pointers): they sign
+        # "=()" but match nothing-in-particular
+        live_prev = [gc for gc in con.prev if gc.guids]
+        r = self._msc_cache[mk] = (
+            guid_sets(st, con.guid) if con.guid else None,
+            [(lk, guid_sets(st, gcs))
+             for lk, gcs in con.links.items() if gcs],
+            guid_sets(st, live_prev)
+            if live_prev and not iter_level else None,
+            [] if iter_level else [
+                (gc.op, None in gc.guids, set(next_prevs(st, gc)))
+                for gc in con.next if gc.guids
+            ],
+            None if con.dateline is None
+            else dateline_bound(con.dateline),
+            [
+                (sc.op, None in sc.values,
+                 set(type_lineages(st, self.types, sc)))
+                for sc in merge_strcons(tscs, match_comp)
+            ],
+            keyed(nscs, False),
+            keyed(vscs, True),
+            # is a value RANGE the producer?  Only when no other bin
+            # predicate (type/name/value equality or prefix) can
+            # produce
+            iter_level and not any(
+                sc.op not in _RANGE_OPS
+                for scs in (tscs, nscs, vscs)
+                for sc in scs
+            ),
+        )
+        return r
 
-    def _string_pred(self, p: Primitive, val: Optional[str], sc,
+    def _string_pred(self, p: Primitive, val: Optional[str], sc, ek,
                      comparator, is_value: bool,
                      iter_level: bool = False,
                      range_is_producer: bool = False) -> bool:
-        """Mirror of _string_cond for =, !=, ~= (ranges bail)."""
+        """_string_cond's test on one primitive; `ek` is the
+        constraint's eq_keys entry for '=' and '!='."""
+        has_null = None in sc.values
+        if sc.op in ("=", "!="):
+            hit = False
+            if val is not None:
+                key = (
+                    val if ek.field == EXACT
+                    else val.lower() if ek.field == LOWER
+                    else getattr(p, ek.field)
+                )
+                if sc.op == "=" and ek.norms is not None:
+                    hit = any(
+                        key == k and p.value_norm == n
+                        for k, n in zip(ek.keys, ek.norms)
+                    )
+                else:
+                    hit = key in ek.keys
+            if sc.op == "=":
+                if (
+                    is_value
+                    and val is None
+                    and p.datatype == 2
+                    and "" in sc.values
+                ):
+                    # value="" also finds string-datatype primitives
+                    # whose value is stored null
+                    # (test/unit/nullvalue.sh)
+                    return True
+                return hit or (has_null and val is None)
+            if not ek.keys and not has_null:
+                return val is not None
+            return not hit and not (has_null and val is None)
         comp = resolve_comparator(comparator)
         nonnull = [v for v in sc.values if v is not None]
-        has_null = any(v is None for v in sc.values)
-
-        def eq_one(lit: str) -> bool:
-            if val is None:
-                return False
-            if is_value and comp == "default":
-                return (
-                    p.value_fkey == fuzzy_key(lit)
-                    and p.value_norm == value_norm_key(lit)
-                )
-            if is_value and comp == "number":
-                lit_key = (
-                    value_norm_key(lit)
-                    if decode_number(lit, scientific=True) is not None
-                    else lit.lower()
-                )
-                return p.value_num == lit_key
-            if is_value and comp == "datetime":
-                return p.value_norm == value_norm_key(lit)
-            if comp in ("case", "octet"):
-                return val == lit
-            return val.lower() == lit.lower()
-
-        if sc.op == "=":
-            if (
-                is_value
-                and "" in nonnull
-                and val is None
-                and p.datatype == 2
-            ):
-                # value="" also finds string-datatype primitives whose
-                # value is stored null (test/unit/nullvalue.sh)
-                return True
-            if nonnull and any(eq_one(v) for v in nonnull):
-                return True
-            if has_null and val is None:
-                return True
-            return False
-        if sc.op == "!=":
-            if not nonnull and not has_null:
-                return val is not None
-            ok = True
-            if nonnull:
-                ok = val is None or not any(eq_one(v) for v in nonnull)
-            if has_null:
-                ok = ok and val is not None
-            return ok
         if sc.op in _RANGE_OPS:
             # mirror of _string_cond's range branch: order-preserving
             # sort keys, plus the comparator-specific scan-membership

@@ -435,6 +435,25 @@ def sort_multikey_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _after_predicate(key_cols, last):
+    """Row-value comparison ``(k1,k2,...) > (v1,v2,...)`` as a Column.
+
+    Expanded to the standard nested form so every comparison pushes
+    down (Parquet min/max pruning sees the leading key's ``>=``).
+    """
+    assert len(key_cols) == len(last)
+    pred = None
+    for i in range(len(key_cols)):
+        clause = None
+        for j in range(i):
+            eq = F.col(key_cols[j]) == F.lit(last[j])
+            clause = eq if clause is None else (clause & eq)
+        gt = F.col(key_cols[i]) > F.lit(last[i])
+        clause = gt if clause is None else (clause & gt)
+        pred = clause if pred is None else (pred | clause)
+    return pred
+
+
 @q(
     "page_offset",
     """
@@ -455,12 +474,10 @@ def page_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
     window).  Instead the page boundary key is found with a distributed
     top-k (TakeOrderedAndProject of the first 1000 keys), and the page
     itself is a key-set continuation ``WHERE (k) > (boundary) ORDER BY
-    k LIMIT 100`` (graphd_spark.pagination) — both phases stay
+    k LIMIT 100`` (_after_predicate) — both phases stay
     distributed at any depth.  The row_number runs over the 100
     collected page rows only.
     """
-    from graphd_spark.pagination import after_predicate
-
     (orders,) = _t(spark, sf_dir, "orders")
     keys = ["o_orderdate", "o_orderkey"]
     boundary = (
@@ -471,7 +488,7 @@ def page_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
     page = orders.select(*keys)
     if boundary:
         last = [boundary[0][c] for c in keys]
-        page = page.filter(after_predicate(keys, last))
+        page = page.filter(_after_predicate(keys, last))
     w = W.orderBy(*keys)
     return (
         page.orderBy(*keys)

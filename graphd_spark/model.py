@@ -340,8 +340,3 @@ class Primitive:
             for f in PRIMITIVE_FIELDS
             for v in (getattr(self, f),)
         )
-
-    @property
-    def is_link(self) -> bool:
-        """A primitive with a left is a link (ref doc/gr-model.txt:164-183)."""
-        return self.left is not None

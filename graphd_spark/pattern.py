@@ -112,12 +112,6 @@ def pattern_shows_contents(pat: Optional[Pattern], con: Constraint) -> bool:
     return any(p.kind == "contents" for p in pat.walk())
 
 
-def pattern_uses_variable(pat: Optional[Pattern], name: str) -> bool:
-    if pat is None:
-        return False
-    return any(p.kind == "variable" and p.var == name for p in pat.walk())
-
-
 # --- assembly -------------------------------------------------------------
 
 

@@ -479,14 +479,6 @@ class PrimitiveStore:
             ParquetLogStore._write_epoch += 1
         return self.next_id
 
-    @classmethod
-    def load_parquet(cls, spark, path: str, db_id: int = PREDICTABLE_DB_ID):
-        """Open a Parquet primitives table as a store WITHOUT loading it
-        onto the driver: returns a :class:`ParquetLogStore` attached to
-        ``path`` (only a 1-row max-id/db-id aggregate is collected).
-        """
-        return ParquetLogStore.attach(spark, path, db_id=db_id)
-
     def __len__(self) -> int:
         return self.next_id
 

@@ -15,6 +15,7 @@ from __future__ import annotations
 import pytest
 
 from graphd_spark.api import GraphSession
+from graphd_spark.model import PREDICTABLE_DB_ID, guid_compose
 
 
 def _seed(gs: GraphSession) -> None:
@@ -35,6 +36,55 @@ def _seed(gs: GraphSession) -> None:
     gs.request('write (name="empty-node")')
     gs.request('write (value="" name="empty-str")')
     gs.request('write (valuetype=2 name="null-str")')
+    gs.request('write (type="knows" value="t1")')
+    gs.request('write (type="owns" value="t2")')
+
+
+def _g(i: int) -> str:
+    """GUID of the _seed store's primitive `i` (ids are predictable)."""
+    return guid_compose(PREDICTABLE_DB_ID, i)
+
+
+_N0, _R0, _N1 = _g(0x00), _g(0x01), _g(0x03)      # nation, region, nation
+_V0, _V1 = _g(0x16), _g(0x17)                     # version chain v0 -> v1 -> v2
+
+#: intrinsic set algebra (graphd_spark.intrinsic): guid/linkage sets,
+#: lineage expansion, next=/prev=, type names, merged string sets, the
+#: equality key table and timestamp id bounds; every one is served by
+#: the fast path (test_intrinsic_queries_take_fast_path)
+INTRINSIC_QUERIES = [
+    f"read (guid=({_N0} {_N1}) guid!=({_N1}) result=((guid value)))",
+    f"read (left=({_N0} null) left~=({_N0}) pagesize=40 "
+    "result=((guid left)))",
+    f"read (live=dontcare newest>=0 guid~={_V1} result=((guid value)))",
+    f"read (live=dontcare newest>=0 guid~={_V0} guid!={_V1} "
+    "result=((guid value)))",
+    f'read (name="in-region" left!={_N0} result=((left)))',
+    f"read (right=({_R0} null) pagesize=40 result=((guid name)))",
+    f"read (live=dontcare newest>=0 prev={_V0} result=((guid)))",
+    f"read (live=dontcare next={_V1} result=((guid)))",
+    f"read (live=dontcare next~={_V0} result=((guid)))",
+    f"read (live=dontcare next!={_V1} result=((guid)))",
+    'read (live=dontcare next=null newest>=0 value~="v*" result=((guid)))',
+    'read (type="knows" result=((guid value type)))',
+    'read (type!="knows" value~="t*" result=((guid value type)))',
+    'read (type=("knows" null) type!="owns" pagesize=60 '
+    "result=((guid value type)))",
+    'read (name=("nation" "region") name!="region" result=((value)))',
+    'read (value=("N1" "N2") value=("N2" "N3") result=((value)))',
+    'read (value=("N1" null) value~=null pagesize=40 result=((guid name)))',
+    # '!=' compares under the comparator's equality alone: " 12"
+    # fuzzy-equals "12" although its value hash differs
+    'read (value!="12" pagesize=40 result=((value)))',
+    'read (value!=("12" "N1") value~="*2" pagesize=40 result=((value)))',
+    'read (dateline>"123456.5" pagesize=30 result=((guid)))',
+    'read (dateline<"123456.8" pagesize=30 result=((guid)))',
+    "read (timestamp>=1970-01-01T00:00:00.0010Z "
+    "timestamp<1970-01-01T00:00:00.0015Z result=((guid)))",
+    "read (timestamp>1970-01-01T00:00:00.0010Z "
+    "timestamp<=1970-01-01T00:00:00.0015Z "
+    "timestamp!=1970-01-01T00:00:00.0011Z result=((guid)))",
+]
 
 
 QUERIES = [
@@ -107,8 +157,7 @@ QUERIES = [
     "result=((guid value)))",
     'read asof=1970-01-01T00:00:00.0030 (live=dontcare value="v0" '
     "result=((guid value live)))",
-    'read (dateline>"123456.5" pagesize=30 result=((guid)))',
-    'read (dateline<"123456.8" pagesize=30 result=((guid)))',
+    *INTRINSIC_QUERIES,
     # fallback shapes (Unsupported -> Spark path; replies must still
     # be identical — the fast session falls back seamlessly)
     'read (sort=$v $v=value pagesize=4 result=((value)))',
@@ -130,6 +179,31 @@ def sessions(spark):
 def test_fast_path_matches_spark_path(sessions, q):
     fast, slow = sessions
     assert fast.request(q) == slow.request(q)
+
+
+def test_intrinsic_queries_take_fast_path(sessions, monkeypatch):
+    """The INTRINSIC_QUERIES pairs compare the fast path with Spark,
+    not Spark with itself: none of them falls back."""
+    from graphd_spark import fastread
+
+    fast, _slow = sessions
+    orig = fastread.FastReader.run
+    served = []
+
+    def spy(self, con):
+        try:
+            out = orig(self, con)
+        except fastread.Unsupported as e:
+            served.append(f"fell back: {e}")
+            raise
+        served.append("fast")
+        return out
+
+    monkeypatch.setattr(fastread.FastReader, "run", spy)
+    for q in INTRINSIC_QUERIES:
+        served.clear()
+        fast.request(q)
+        assert served == ["fast"], (q, served)
 
 
 def test_fast_path_needs_no_spark():
@@ -374,6 +448,33 @@ def test_two_path_generator_sweep(spark, seed):
     for ln in lines:
         a, b = fast.request(ln), slow.request(ln)
         assert a == b, f"{ln}\n fast: {a}\n slow: {b}"
+
+
+@pytest.mark.parametrize(
+    "gen,seeds",
+    [("gen_script", range(8)), ("gen_or_script", range(4))],
+    ids=["gen_script", "gen_or_script"],
+)
+def test_self_parity_slice(spark, gen, seeds):
+    """A fixed seed slice of the differential generators replayed
+    through ONE session, every read answered with the fast path on
+    and then off: a parity oracle that needs no reference binary."""
+    import tests.test_differential as td
+
+    diverged = []
+    for seed in seeds:
+        gs = GraphSession(spark)
+        for ln in getattr(td, gen)(seed):
+            if not ln.startswith("read"):
+                gs.request(ln)
+                continue
+            gs.fast_read_enabled = True
+            a = gs.request(ln)
+            gs.fast_read_enabled = False
+            b = gs.request(ln)
+            if a != b:
+                diverged.append(f"seed {seed}: {ln}\n fast: {a}\n slow: {b}")
+    assert not diverged, "\n".join(diverged)
 
 
 def test_vrange_value_beyond_rules():
